@@ -3,9 +3,9 @@ column expressions (SURVEY.md §2.4, C1–C17).
 
 Everything here is a pure Column→Column function built from
 ``pyspark.sql.functions`` builtins so conversions stay JVM-side inside
-WholeStageCodegen. Only the locale-aware number/temporal parsers (which Spark
-cannot express — its casts are locale-fixed) drop to Arrow-batched pandas UDFs,
-mirroring the reference's ``codec.locale`` setting
+WholeStageCodegen. The locale-aware number parser, which Spark's
+locale-fixed casts cannot express, swaps the locale's separators before the
+cast, mirroring the reference's ``codec.locale`` setting
 (reference: sink/src/it/java/com/datastax/oss/kafka/sink/ccm/JsonEndToEndCCMIT.java:303-336).
 """
 
@@ -13,18 +13,12 @@ from __future__ import annotations
 
 from decimal import Decimal as PyDecimal
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StringType
 
 # --- C1/C2: numeric width / boolean / string casts -------------------------
 # Plain `.cast(target)` — applied by the mapping compiler from table metadata.
 # (reference: StructEndToEndCCMIT.java:86-224, JsonEndToEndCCMIT.java:109-158)
-
-
-def cast_to(col: Column, spark_type: str) -> Column:
-    return col.cast(spark_type)
 
 
 def number_to_boolean(col: Column) -> Column:
@@ -65,22 +59,6 @@ def parse_number_locale(col: Column, locale: str = "en_US") -> Column:
     if dec != ".":
         cleaned = F.regexp_replace(cleaned, re_escape(dec), ".")
     return cleaned.cast("double")
-
-
-def format_number_locale(col: Column, locale: str = "en_US") -> Column:
-    """Number → string per locale (reverse direction)."""
-    group, dec = _LOCALE_SEPS.get(locale, (",", "."))
-
-    def _fmt(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None or pd.isna(v):
-                return None
-            txt = f"{v:,}"
-            return txt.replace(",", "\0").replace(".", dec).replace("\0", group)
-
-        return s.map(one)
-
-    return F.pandas_udf(_fmt, StringType())(col.cast(DoubleType()))
 
 
 def re_escape(s: str) -> str:
@@ -205,13 +183,6 @@ def list_to_udt(col: Column, field_names: list[str], field_types: list[str]) -> 
         col.getItem(i).cast(t).alias(name)
         for i, (name, t) in enumerate(zip(field_names, field_types))
     ]
-    return F.struct(*fields)
-
-
-def struct_to_udt(col: Column, field_names: list[str], field_types: list[str]) -> Column:
-    """Struct → UDT by field name with coercion; strict arity is validated by
-    the compiler against table metadata (StructToUDTCodecTest.java:66-81)."""
-    fields = [col.getField(n).cast(t).alias(n) for n, t in zip(field_names, field_types)]
     return F.struct(*fields)
 
 

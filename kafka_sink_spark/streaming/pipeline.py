@@ -22,11 +22,28 @@ Scale design: foreachBatch receives a distributed DataFrame; every stage here
 is declarative (the same compile_mapping/route_writes plans as batch mode), so
 a 1000-executor cluster runs the micro-batch exactly like a batch job — no
 driver-side loops, no collect.
+
+Concurrency: a micro-batch runs in two phases, each submitting its Spark jobs
+from a thread per job, as the reference's ``put()`` sends every table's
+statements as one async stream (CassandraSinkTask.java:113-154). Each topic
+is decoded once per micro-batch, and that decode is cached before the
+good/bad split when several jobs read it. The checks phase counts
+unknown-topic records and every table's mapping errors at the same time; the
+writes phase runs every table's dead-letter routing and compile → route →
+write at the same time. Two consequences of that order:
+- under None/Driver a mapping error in any table stops every writer of the
+  batch (no table is written before the error is found);
+- under None a failed write no longer stops sibling tables already in
+  flight; the first failure in config order is raised and the batch replays
+  (at-least-once, as with the reference's ``put()``).
+``maxConcurrentRequests`` bounds in-flight requests per Spark task, so
+tables written at the same time each get their own window.
 """
 
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -190,6 +207,34 @@ def split_mapping_errors(
     return good, bad
 
 
+@dataclass
+class _TablePlan:
+    """One table's share of a micro-batch, planned on the driver: its good
+    records (over the topic's shared decode), its mapping errors, and how
+    many of them the checks phase counted."""
+
+    table: TableConfig
+    schema: TableSchema
+    key: str
+    good: DataFrame
+    bad: DataFrame | None
+    n_bad: int = 0
+
+
+def _run_concurrently(spark: SparkSession, jobs: list[Callable[[], object]]) -> list:
+    """Run every job on its own thread, wait for all of them, and return
+    their futures in job order (``result()`` re-raises a job's failure).
+
+    Each submission is wrapped on its own: ``inheritable_thread_target``
+    clones the caller's local properties when it wraps, so one shared
+    wrapper would hand every thread the same ``Properties`` object, and a
+    ``setLocalProperty`` in one job would leak into its siblings."""
+    from pyspark.util import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=max(len(jobs), 1)) as pool:
+        return [pool.submit(inheritable_thread_target(spark)(job)) for job in jobs]
+
+
 def process_micro_batch(
     batch_df: DataFrame,
     config: SinkConfig,
@@ -207,12 +252,32 @@ def process_micro_batch(
     routed frame to ``writer`` (or returns them keyed 'ks.table' when no
     writer is given — the test/oracle path).
 
+    Like the reference's ``put()``, which sends every table's statements as
+    one async stream (CassandraSinkTask.java:113-154), the tables' Spark jobs
+    run at the same time, in two phases:
+
+    1. Checks. Every table is planned on the driver. Each topic is decoded
+       once, and the decode is persisted before the good/bad split whenever
+       more than one job reads it, so tables sharing a topic share one
+       cached parse. The unknown-topic count and every table's mapping-error
+       count then run concurrently.
+    2. Writes. The ignoreErrors decision is applied per table in config
+       order; then every table's dead-letter routing, compile → route and
+       ``writer`` run concurrently.
+
+    ``SinkMetrics`` are merged on the calling thread in config order, and
+    the shared decodes are unpersisted once every writer has returned.
+    ``maxConcurrentRequests`` stays a per-Spark-task window, so tables
+    written at the same time each get their own window.
+
     Unknown-topic records are counted, not written
     (SimpleEndToEndSimulacronIT.java:740-755). Records that fail the typed
     decode are mapping errors: under ignoreErrors=All they are diverted to
     ``error_sink`` (the dead-letter channel) and counted; under None/Driver
-    they fail the batch so Spark's retry rewinds the offsets — the
-    reference's failure-offset behavior (SURVEY §2.8).
+    they fail the batch before any writer starts, so Spark's retry rewinds
+    the offsets — the reference's failure-offset behavior (SURVEY §2.8).
+    Under None a failed write fails the batch too; sibling tables already
+    in flight finish, and the first failure in config order is raised.
 
     ``value_schemas``/``key_schemas`` entries select the decode mode per
     topic: a StructType means JSON-with-literal-fallback; an Avro schema
@@ -225,92 +290,121 @@ def process_micro_batch(
     metrics = metrics if metrics is not None else SinkMetrics()
     value_schemas = value_schemas or {}
     key_schemas = key_schemas or {}
-    configured_topics = {t.topic for t in config.tables}
+    spark = batch_df.sparkSession
+    permissive = config.ignore_errors == "All"
 
-    unknown = batch_df.filter(~F.col("topic").isin(list(configured_topics)))
-    metrics.failed_with_unknown_topic += unknown.count()
-
-    out: dict[str, DataFrame] = {}
-    for table in config.tables:
-        schema = schemas[(table.keyspace, table.table)]
-        table.validate_against(schema)  # fail-fast, every batch start is cheap
-        topic_records = batch_df.filter(F.col("topic") == table.topic)
-        vs = value_schemas.get(table.topic)
-        ks = key_schemas.get(table.topic)
-        key = f"{table.topic}|{table.keyspace}.{table.table}"
+    # --- plan every table on the driver, one decode per topic ---
+    decodes: dict[str, tuple[DataFrame, bool]] = {}
+    for topic in dict.fromkeys(t.topic for t in config.tables):
+        vs, ks = value_schemas.get(topic), key_schemas.get(topic)
+        topic_records = batch_df.filter(F.col("topic") == topic)
         if isinstance(vs, str):  # Avro Struct mode (schema JSON string)
             from kafka_sink_spark.sources.avro import decode_avro_records
 
-            permissive = config.ignore_errors == "All"
-            dec = decode_avro_records(
+            decodes[topic] = decode_avro_records(
                 topic_records,
                 vs,
                 key_avro_schema=ks if isinstance(ks, str) else None,
                 options={"mode": "PERMISSIVE" if permissive else "FAILFAST"},
                 corrupt_col=AVRO_CORRUPT if permissive else None,
-            )
-            if permissive:
-                decoded = dec.filter(~F.col(AVRO_CORRUPT)).drop(AVRO_CORRUPT)
-                bad = dec.filter(F.col(AVRO_CORRUPT)).drop(AVRO_CORRUPT)
-            else:
-                decoded, bad = dec, None
+            ), True
         else:
-            decoded = decode_records(topic_records, value_schema=vs, key_schema=ks)
-            decoded, bad = split_mapping_errors(decoded, table)
-        cached = None
-        if bad is not None:
-            # The decode feeds up to three actions (error count, error sink,
-            # the write) — persist it once instead of re-parsing per action.
-            cached = decoded.persist()
-            n_bad = bad.count()
-            if n_bad:
-                if config.ignore_errors == "All":
-                    metrics.bump(key, n_bad, failed=True)
-                    if error_sink is not None:
-                        error_sink(bad, table)
-                else:
-                    cached.unpersist()
+            decodes[topic] = decode_records(
+                topic_records, value_schema=vs, key_schema=ks
+            ), False
+
+    plans: list[_TablePlan] = []
+    for table in config.tables:
+        schema = schemas[(table.keyspace, table.table)]
+        table.validate_against(schema)  # fail-fast, every batch start is cheap
+        decoded, avro = decodes[table.topic]
+        if avro and permissive:
+            good = decoded.filter(~F.col(AVRO_CORRUPT)).drop(AVRO_CORRUPT)
+            bad = decoded.filter(F.col(AVRO_CORRUPT)).drop(AVRO_CORRUPT)
+        elif avro:
+            good, bad = decoded, None
+        else:
+            good, bad = split_mapping_errors(decoded, table)
+        key = f"{table.topic}|{table.keyspace}.{table.table}"
+        plans.append(_TablePlan(table, schema, key, good, bad))
+
+    # A decode read by more than one job (error counts, writes) is parsed
+    # once and cached instead of once per job.
+    readers: dict[str, int] = {}
+    for plan in plans:
+        topic = plan.table.topic
+        readers[topic] = readers.get(topic, 0) + 1 + (plan.bad is not None)
+    cached = [decodes[t][0].persist() for t, n in readers.items() if n > 1]
+
+    try:
+        # --- phase 1: unknown-topic and mapping-error counts ---
+        unknown = batch_df.filter(~F.col("topic").isin(list(decodes)))
+        checked = [p for p in plans if p.bad is not None]
+        counts = _run_concurrently(
+            spark, [unknown.count] + [p.bad.count for p in checked]
+        )
+        metrics.failed_with_unknown_topic += counts[0].result()
+        for plan, fut in zip(checked, counts[1:]):
+            plan.n_bad = fut.result()
+        if not permissive:
+            for plan in plans:
+                if plan.n_bad:
                     raise RuntimeError(
-                        f"{n_bad} record(s) failed mapping for {key} "
+                        f"{plan.n_bad} record(s) failed mapping for {plan.key} "
                         f"(ignoreErrors={config.ignore_errors} rewinds mapping errors)"
                     )
-        mapped = compile_mapping(decoded, table, schema)
-        timed = add_ttl_writetime(mapped, table)
-        routed = route_writes(timed, table, schema)
-        if writer is not None:
+
+        # --- phase 2: dead letters, compile → route → write ---
+        def write(plan: _TablePlan):
+            """(routed, rows, write stats or None, write failed)."""
+            table, schema = plan.table, plan.schema
+            if plan.n_bad and error_sink is not None:
+                error_sink(plan.bad, table)
+            mapped = compile_mapping(plan.good, table, schema)
+            routed = route_writes(add_ttl_writetime(mapped, table), table, schema)
+            if writer is None:
+                return routed, routed.count(), None, False
             try:
                 stats = writer(routed, table, schema)
-                # A write_routed-shaped stats dict feeds the KAF-99 batch
-                # histograms; writers returning None keep the old contract.
-                if isinstance(stats, dict):
-                    metrics.observe_write(key, stats)
-                    # NB: don't use stats.get("rows", routed.count()) —
-                    # Python evaluates the default eagerly, re-running the
-                    # batch lineage as a full count job even when the
-                    # writer already returned the row count (ADVICE r7).
-                    n = stats["rows"] if "rows" in stats else routed.count()
-                    metrics.bump(key, n)
-                else:
-                    metrics.bump(key, routed.count())
             except Exception:
-                if config.ignore_errors in ("All", "Driver"):
-                    # Divert: count as failed, keep the batch alive.  The
-                    # reference's recordCounter increments at the MAPPING
-                    # stage, so driver-failed records appear in BOTH
-                    # counters (SimpleEndToEndSimulacronIT.java:555-564:
-                    # recordCounter=5 with 3 driver failures; :430-470:
-                    # recordCounter=4 excludes only the MAPPING failure).
-                    n_routed = routed.count()
-                    metrics.bump(key, n_routed)
-                    metrics.bump(key, n_routed, failed=True)
-                else:
-                    raise  # None → batch fails → Spark retries (offset rewind)
-        else:
-            metrics.bump(key, routed.count())
-        if cached is not None:
-            cached.unpersist()
-        out[f"{table.keyspace}.{table.table}"] = routed
-    return out
+                if config.ignore_errors == "None":
+                    raise  # batch fails → Spark retries (offset rewind)
+                # Divert: count as failed, keep the batch alive.
+                return routed, routed.count(), None, True
+            # A write_routed-shaped stats dict feeds the KAF-99 batch
+            # histograms; writers returning None keep the old contract.
+            if not isinstance(stats, dict):
+                return routed, routed.count(), None, False
+            # NB: don't use stats.get("rows", routed.count()) — Python
+            # evaluates the default eagerly, re-running the batch lineage as
+            # a full count job even when the writer already returned the row
+            # count (ADVICE r7).
+            n = stats["rows"] if "rows" in stats else routed.count()
+            return routed, n, stats, False
+
+        writes = _run_concurrently(spark, [lambda p=p: write(p) for p in plans])
+
+        # --- merge in config order; the first failure is raised ---
+        out: dict[str, DataFrame] = {}
+        for plan, fut in zip(plans, writes):
+            if plan.n_bad:
+                metrics.bump(plan.key, plan.n_bad, failed=True)
+            routed, n, stats, failed = fut.result()
+            if stats is not None:
+                metrics.observe_write(plan.key, stats)
+            metrics.bump(plan.key, n)
+            if failed:
+                # The reference's recordCounter increments at the MAPPING
+                # stage, so driver-failed records appear in BOTH counters
+                # (SimpleEndToEndSimulacronIT.java:555-564: recordCounter=5
+                # with 3 driver failures; :430-470: recordCounter=4 excludes
+                # only the MAPPING failure).
+                metrics.bump(plan.key, n, failed=True)
+            out[f"{plan.table.keyspace}.{plan.table.table}"] = routed
+        return out
+    finally:
+        for df in cached:
+            df.unpersist()
 
 
 def start_sink_stream(
