@@ -46,14 +46,17 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Cold mode (r14 verdict ask #1): the session-scoped substrate memos
-# (kafka_sink_spark/substrates.py) mean the default min-of-reps numbers are
-# warm-only — the first consumer's first rep pays each substrate build and
-# the min drops it.  SPARK_GRAFT_BENCH_COLD=1 clears every substrate memo
-# before EVERY rep, so each published number is the honest cold
-# single-query cost (substrate builds included).  Cold runs are labeled
-# ("mode": "cold") and gate against BENCH_BASELINE_COLD.json, never the
-# warm pin.  Timing methodology (noop sink, min of reps) is unchanged.
+# Cold mode: the session-scoped substrate memo (@substrates.memo) means the
+# default min-of-reps numbers are warm-only — the first consumer's first rep
+# pays each substrate build and the min drops it.  SPARK_GRAFT_BENCH_COLD=1
+# clears every memo entry AND Spark's cache before EVERY rep: clear_all()
+# drops the memoized substrates, and spark.catalog.clearCache() releases the
+# inline persists inside query builders that no memo owns (CacheManager
+# matches by plan, so without it reps 2+ would read rep 1's materialization).
+# Each published number is then the honest cold single-query cost
+# (substrate builds included).  Cold runs are labeled ("mode": "cold") and
+# gate against BENCH_BASELINE_COLD.json, never the warm pin.  Timing
+# methodology (noop sink, min of reps) is unchanged.
 BENCH_COLD = os.environ.get("SPARK_GRAFT_BENCH_COLD") == "1"
 
 # Sidecar output (r14 verdict ask #2): round 13's one-line JSON outgrew the
@@ -228,6 +231,7 @@ def main() -> None:
                 from kafka_sink_spark import substrates
 
                 substrates.clear_all()
+                spark.catalog.clearCache()
             t0 = time.perf_counter()
             force(make_df())
             best = min(best, time.perf_counter() - t0)

@@ -43,6 +43,7 @@ from kafka_sink_spark.operators.writes import (
     ROUTE_INSERT,
     TTL_COL,
     WRITETIME_COL,
+    cql_templates,
 )
 
 # The optional cassandra-driver, probed once at import. Without it the
@@ -61,18 +62,6 @@ except ImportError:  # pragma: no cover
             return "UNSET"
 
     UNSET = _Unset()
-
-
-def statement_texts(table: TableConfig, schema: TableSchema) -> dict[str, str]:
-    """The prepared-statement texts for each route (W1/W2/W4/W3/W5) —
-    delegates to the single template builder in operators.writes so the
-    executed statements can never drift from the oracle-verified ``cql``
-    column. Adds ``insert_plain`` (no USING TIMESTAMP) for records without a
-    writetime: binding null to a USING TIMESTAMP variable is a server error.
-    """
-    from kafka_sink_spark.operators.writes import cql_templates
-
-    return cql_templates(table, schema)
 
 
 def _route_and_params(
@@ -207,7 +196,7 @@ def write_routed(
     sort_cols = pk + [
         c for c in schema.primary_key if c not in pk and c in routed.columns
     ]
-    texts = statement_texts(table, schema)
+    texts = cql_templates(table, schema)
     max_batch = config.max_number_of_records_in_batch
     max_inflight = config.max_concurrent_requests
     table_ref = table

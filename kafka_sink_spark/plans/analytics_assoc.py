@@ -46,6 +46,7 @@ from kafka_sink_spark.extensions.dedup import shingle_hashes
 from kafka_sink_spark.plans.queries import register
 from kafka_sink_spark.plans.stream_twin import finish_stream_twin
 from kafka_sink_spark.session import load_tables
+from kafka_sink_spark.substrates import memo
 
 # --------------------------------------------------------------------------
 # PPJoin-style exact similarity join with prefix filtering
@@ -53,9 +54,8 @@ from kafka_sink_spark.session import load_tables
 
 _PP_T_PPM = 500_000  # Jaccard threshold 0.5
 
-_SH_CACHE: dict = {}
 
-
+@memo
 def _distinct_shingles(spark, sf_dir: str):
     """Distinct (doc_id, shingle-hash) postings, persisted and reused: the
     PPJoin plan consumes this table FOUR times (sizes, document
@@ -65,17 +65,12 @@ def _distinct_shingles(spark, sf_dir: str):
     the span-dup family (VERDICT r5)."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SH_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     sh = (
         shingle_hashes(docs, "text")
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _SH_CACHE[key] = sh
     return sh
 
 

@@ -610,19 +610,17 @@ def sink_now_timeuuid_invariants(spark, sf_dir):
     columns of one row always differ (fresh per column per row), and all
     2·n generated values are globally unique. The oracle predicts each
     counter as the row count."""
-    from pyspark import StorageLevel
-
     from kafka_sink_spark.functions.timeuuid import is_timeuuid
 
     # The Arrow timeuuid generation (the query's whole cost) feeds BOTH
     # aggregation branches (per-row counters + the cross-column distinct);
-    # persist so the ArrowEvalPython pass executes once, not once per branch
-    # (guide §7.2 / r14 verdict ask #7).  Freshness invariants are
-    # per-materialization, so sharing one materialization cannot change the
-    # counters.
-    out = QUERIES["sink_now_timeuuid"](spark, sf_dir).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # materialize it once so the ArrowEvalPython pass executes once, not once
+    # per branch (guide §7.2).  An eager localCheckpoint rather than a
+    # persist: CacheManager matches cached data by plan, so a persist would
+    # leak into the session and serve a later plain sink_now_timeuuid from
+    # this materialization.  Freshness invariants are per-materialization,
+    # so sharing one materialization cannot change the counters.
+    out = QUERIES["sink_now_timeuuid"](spark, sf_dir).localCheckpoint()
     both_v1 = is_timeuuid(F.col("loaded_at")) & is_timeuuid(F.col("loaded_at2"))
     per_row = out.agg(
         F.count(F.lit(1)).alias("n_rows"),

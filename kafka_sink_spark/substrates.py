@@ -1,84 +1,88 @@
-"""Central registry of the session-scoped substrate memo caches.
+"""The session-scoped memo for materialized shared substrates.
 
-Every entry is a module-level dict that memoizes a *materialized* shared
-substrate (persisted or checkpointed DataFrames, or tuples/lists of them)
-per (applicationId, input-plan, hyperparameters) key.  The memos exist so
-that K consumers of the same corpus pass pay for ONE build per session —
-the architecturally right shape at scale — but they also mean a
-min-of-reps benchmark only ever publishes *warm* per-query numbers (the
-first rep of the first consumer pays the build; the min drops it).
+A substrate is a persisted or checkpointed DataFrame, or a tuple/list of
+them, that several catalog queries read: the co-purchase edges, the BM25
+scores, the trained IVF-PQ index and so on.  Its builder is decorated with
+``@memo``, so K consumers of the same corpus pass in one Spark session pay
+for ONE build.
 
-This registry makes that accounting auditable (r14 verdict ask #1):
+Key rule: an entry is keyed by the builder, the session's ``applicationId``
+and every argument of the builder, bound with ``inspect.signature`` and
+defaults applied, so ``component_rows(emb, 1, 64)`` and
+``component_rows(emb, m_subspaces=1, sub_len=64)`` share one entry.  A
+DataFrame argument enters the key as its analyzed plan's
+``semanticHash()``; a SparkSession argument enters only through the
+``applicationId``, which comes from the first SparkSession or DataFrame
+argument, so nothing crosses sessions.  A builder that raises stores
+nothing.
 
-- ``clear_all()`` drops every memo entry and unpersists the cached frames,
-  so ``SPARK_GRAFT_BENCH_COLD=1`` bench runs re-pay every substrate build
-  inside every rep — the honest cold single-query cost.
-- ``sizes()`` reports how many entries each cache holds, so a bench run
+Every entry lives in the one dict below, which makes the accounting
+auditable:
+
+- ``clear_all()`` drops every entry and unpersists its frames, so
+  ``SPARK_GRAFT_BENCH_COLD=1`` bench runs re-pay every substrate build
+  inside every rep.
+- ``sizes()`` reports how many entries each builder holds, so a bench run
   can publish which substrates were actually materialized.
 
-The two non-substrate module caches are deliberately NOT listed:
-``session._RELATION_CACHE`` memoizes *unmaterialized* parquet relations
-(pure schema-inference driver roundtrips — nothing is computed or stored),
-and ``operators.cassandra_writer._BUNDLE_CACHE`` holds a config string.
-
-tests/test_substrate_registry.py scans the package source for
-``*_CACHE`` declarations and fails if a new substrate cache is added
-without registering it here.
+Two module caches are deliberately not memos, because they hold no
+materialized frames: ``session._RELATION_CACHE`` memoizes unmaterialized
+parquet relations (schema-inference round trips only), and
+``operators.cassandra_writer._BUNDLE_CACHE`` holds a bundle path.
+tests/test_substrate_registry.py fails on any other module-level
+``*_CACHE``.
 """
 
 from __future__ import annotations
 
-import importlib
+import collections
+import functools
+import inspect
 
-# (module, attribute) for every substrate memo cache in the package.
-SUBSTRATE_CACHES: list[tuple[str, str]] = [
-    ("kafka_sink_spark.extensions.dedup", "_CC_CACHE"),
-    ("kafka_sink_spark.extensions.similarity", "_COMPONENT_CACHE"),
-    ("kafka_sink_spark.extensions.similarity", "_LLOYD_CACHE"),
-    ("kafka_sink_spark.extensions.similarity", "_TRAINED_DIST_CACHE"),
-    ("kafka_sink_spark.extensions.similarity", "_IVFPQ_INDEX_CACHE"),
-    ("kafka_sink_spark.plans.analytics_assoc", "_SH_CACHE"),
-    ("kafka_sink_spark.plans.analytics_corpus", "_BIGRAM_CACHE"),
-    ("kafka_sink_spark.plans.analytics_corpus", "_DSIR_CACHE"),
-    ("kafka_sink_spark.plans.analytics_curation", "_SHINGLE_CACHE"),
-    ("kafka_sink_spark.plans.analytics_fusion", "_BM25_POSTING_CACHE"),
-    ("kafka_sink_spark.plans.analytics_inference", "_LP_CACHE"),
-    ("kafka_sink_spark.plans.analytics_matching", "_ORIENT_CACHE"),
-    ("kafka_sink_spark.plans.analytics_matching", "_TRIANGLE_CACHE"),
-    ("kafka_sink_spark.plans.analytics_mining", "_EDGE_CACHE"),
-    ("kafka_sink_spark.plans.analytics_mining", "_RANK_CACHE"),
-    ("kafka_sink_spark.plans.analytics_profiles", "_SUPPORT_CACHE"),
-    ("kafka_sink_spark.plans.analytics_quality", "_SPAN_HASH_CACHE"),
-    ("kafka_sink_spark.plans.analytics_retrieval", "_BM25_SCORED_CACHE"),
-    ("kafka_sink_spark.plans.analytics_sanitize", "_EXCISION_CACHE"),
-    ("kafka_sink_spark.plans.analytics_sanitize", "_LINE_CACHE"),
-    ("kafka_sink_spark.plans.analytics_sanitize", "_CLS_SCORED_CACHE"),
-    ("kafka_sink_spark.plans.analytics_stats", "_XQ_CACHE"),
-    ("kafka_sink_spark.plans.analytics_weblm", "_KN_SCORED_CACHE"),
-    ("kafka_sink_spark.plans.analytics_weblm", "_DOC_TRIGRAM_CACHE"),
-]
+from pyspark.sql import DataFrame, SparkSession
+
+# (builder name, applicationId, *bound arguments) -> materialized substrate.
+_SUBSTRATE_CACHE: dict[tuple, object] = {}
 
 
-def _caches() -> list[tuple[str, dict]]:
-    out = []
-    for mod_name, attr in SUBSTRATE_CACHES:
-        mod = importlib.import_module(mod_name)
-        out.append((f"{mod_name.rsplit('.', 1)[-1]}.{attr}", getattr(mod, attr)))
-    return out
+def memo(fn):
+    """Memoize the substrate builder ``fn`` per (session, arguments) — see
+    the module docstring for the key rule."""
+    sig = inspect.signature(fn)
+    name = f"{fn.__module__.rsplit('.', 1)[-1]}.{fn.__qualname__}"
+
+    @functools.wraps(fn)
+    def wrapper(*args, **kwargs):
+        bound = sig.bind(*args, **kwargs)
+        bound.apply_defaults()
+        session, parts = None, []
+        for v in bound.arguments.values():
+            if isinstance(v, DataFrame):
+                session = session or v.sparkSession
+                parts.append(v._jdf.queryExecution().analyzed().semanticHash())
+            elif isinstance(v, SparkSession):
+                session = session or v
+            else:
+                parts.append(v)
+        key = (name, session.sparkContext.applicationId, *parts)
+        if key not in _SUBSTRATE_CACHE:
+            _SUBSTRATE_CACHE[key] = fn(*args, **kwargs)
+        return _SUBSTRATE_CACHE[key]
+
+    return wrapper
 
 
-def _unpersist(value) -> None:
-    """Unpersist a cache value: a DataFrame, or a tuple/list/dict of them.
-    Checkpointed frames have no cached plan to unpersist — dropping the
-    reference is enough to force a rebuild."""
+def _unpersist(value, seen: set) -> None:
+    """Unpersist a memo value: a DataFrame, or a tuple/list of them, each
+    frame once.  Checkpointed frames have no cached plan to unpersist —
+    dropping the reference is enough to force a rebuild."""
     if isinstance(value, (tuple, list)):
         for v in value:
-            _unpersist(v)
+            _unpersist(v, seen)
         return
-    if isinstance(value, dict):
-        for v in value.values():
-            _unpersist(v)
+    if id(value) in seen:
         return
+    seen.add(id(value))
     unpersist = getattr(value, "unpersist", None)
     if callable(unpersist):
         try:
@@ -90,15 +94,14 @@ def _unpersist(value) -> None:
 def clear_all() -> int:
     """Drop every substrate memo and unpersist its frames. Returns the
     number of entries cleared."""
-    n = 0
-    for _, cache in _caches():
-        for value in cache.values():
-            _unpersist(value)
-        n += len(cache)
-        cache.clear()
+    seen: set = set()
+    for value in _SUBSTRATE_CACHE.values():
+        _unpersist(value, seen)
+    n = len(_SUBSTRATE_CACHE)
+    _SUBSTRATE_CACHE.clear()
     return n
 
 
 def sizes() -> dict[str, int]:
-    """Entry count per cache (only non-empty ones) — bench provenance."""
-    return {name: len(c) for name, c in _caches() if c}
+    """Entry count per builder (only non-empty ones) — bench provenance."""
+    return dict(collections.Counter(key[0] for key in _SUBSTRATE_CACHE))

@@ -12,12 +12,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_sink_spark.config import ColumnSpec, SinkConfig, TableConfig, TableSchema
 from kafka_sink_spark.mapping.parser import parse_mapping
-from kafka_sink_spark.operators.cassandra_writer import (
-    UNSET,
-    statement_texts,
-    write_routed,
-)
-from kafka_sink_spark.operators.writes import run_sink_pipeline
+from kafka_sink_spark.operators.cassandra_writer import UNSET, write_routed
+from kafka_sink_spark.operators.writes import cql_templates, run_sink_pipeline
 from kafka_sink_spark.session import load_tables
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -108,7 +104,7 @@ def test_statement_texts_match_reference_shapes():
         [ColumnSpec("a", "bigint", primary_key=True), ColumnSpec("b", "int")],
     )
     table = TableConfig("x", "ks", "t", parse_mapping("a=key, b=value.b"))
-    texts = statement_texts(table, schema)
+    texts = cql_templates(table, schema)
     assert texts["insert"] == (
         "INSERT INTO ks.t(a,b) VALUES (:a,:b) "
         "USING TIMESTAMP :message_internal_timestamp"

@@ -452,6 +452,21 @@ def test_now_function_timestamps_in_window(spark):
         assert t0 <= u.time <= t1, (v, u.time, t0, t1)
 
 
+def test_now_invariants_leave_no_cached_data(spark, sf_dir):
+    """sink_now_timeuuid_invariants materializes the timeuuid frame once for
+    its two aggregation branches. That materialization must stay outside
+    CacheManager, which matches cached data by plan: otherwise a plain
+    sink_now_timeuuid run later in the same session reads the invariants'
+    cached uuids instead of generating fresh ones."""
+    from kafka_sink_spark.plans import QUERIES
+
+    QUERIES["sink_now_timeuuid_invariants"](spark, sf_dir).collect()
+    plain = QUERIES["sink_now_timeuuid"](spark, sf_dir)
+    assert "InMemoryRelation" not in (
+        plain._jdf.queryExecution().withCachedData().toString()
+    )
+
+
 def test_config_parse_roundtrip():
     cfg = parse_sink_config(
         {
